@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops.{Dedup, TextOps}
@@ -8,7 +8,7 @@ import graft.ops.{Dedup, TextOps}
 /** End-to-end training-data curation over a contract-schema table — the
   * composition proof that the engine's pieces are one pipeline, not a
   * bag of demos: extract → quality-filter → exact dedup → fuzzy dedup →
-  * language annotation, in FOUR shuffles total at any scale.
+  * language annotation.
   *
   * Stage shapes (each documented at its operator):
   *  1. extract: skew-isolated narrow parse (SgmlExtract.extractDf over
@@ -17,11 +17,13 @@ import graft.ops.{Dedup, TextOps}
   *  3. exact dedup: row_number over a window keyed by md5(text), keep
   *     the lowest doc_id — shuffle 1, no join.
   *  4. fuzzy dedup: MinHash band bucket-collect → Jaccard-verified pairs
-  *     (Dedup.verifiedPairsOf) — shuffle 2 (band groupBy); survivors via
-  *     left-anti join on the losers (every doc that is the GREATER member
-  *     of a verified pair — deterministic, order-free) — shuffle 3.
-  *     Losers are bounded by the duplicate rate, so the anti-join's
-  *     small side broadcasts in practice (Spark decides; no hint forced).
+  *     (Dedup.verifiedPairsOf) — one shuffle on the band key, shared by
+  *     the mega-bucket valve's window count and the collect; survivors
+  *     via left-anti join on the losers (every doc that is the GREATER
+  *     member of a verified pair — deterministic, order-free; no
+  *     distinct, the anti-join is duplicate-insensitive). Losers are
+  *     bounded by the duplicate rate, so the anti-join's small side
+  *     broadcasts in practice (Spark decides; no hint forced).
   *  5. language annotation: narrow (TextOps.withLangId).
   *
   * Deterministic end to end, and SQL-expressible stage by stage — the
@@ -91,14 +93,13 @@ object Pipeline {
     * builds, so a capped run never silently reads as "covered
     * everything". One row: (dropped_buckets, dropped_rows) — zeros when
     * nothing was over the cap. Callers of `curate(docs, cfg)` pass
-    * `SgmlExtract.extractDf(docs, cfg.extract)` as `extracted`; the
-    * banded frame is served from the capBuckets swapCache when the
-    * curation ran on this session, so the audit does not re-pay the
-    * signature pass. */
+    * `SgmlExtract.extractDf(docs, cfg.extract)` as `extracted`. A
+    * separate job: it recomputes the bands (`run` instead observes the
+    * same numbers inside its curated write). */
   def dropAudit(extracted: DataFrame, cfg: Config = Config()): DataFrame = {
     val exact = exactStage(qualityStage(extracted))
     Dedup.droppedBucketStats(Dedup.bandsOf(exact, "doc_id", "text"),
-      Seq("band", "band_hash"), cfg.maxBucket)
+      Dedup.BandKeys, cfg.maxBucket)
   }
 
   /** Contract table (doc_id, spans) → curated (doc_id, text, predicted_lang,
@@ -119,9 +120,14 @@ object Pipeline {
     // `keep`: extra input columns carried through the projection (the
     // streaming leg threads its event-time column this way — a narrow
     // passthrough, not a join)
+    // The text must be a LINEAR join of the span texts: the quality filter
+    // evaluates it once per predicate that reads it, so a concat that
+    // copies its growing prefix per span is paid quadratically, several
+    // times. extract_spans never emits a null span text (media spans carry
+    // ""); array_join would skip one.
     val texts = extracted
       .select(col("doc_id") +:
-        expr("aggregate(spans, '', (acc, sp) -> acc || sp.text)").as("text") +:
+        array_join(col("spans.text"), "").as("text") +:
         size(col("errors")).as("n_errors") +:
         keep.map(col): _*)
     TextOps.withQuality(texts)
@@ -166,9 +172,10 @@ object Pipeline {
   /** Stages 4-5 given the exact-deduped frame and its verified pairs:
     * losers (the greater member of each pair) drop via anti-join, then
     * language annotation and the curated column contract. ONE home for
-    * this tail — `curateExtracted` and `run` must not drift. */
+    * this tail — `curateExtracted` and `run` must not drift. No
+    * distinct on the losers: a left-anti join ignores duplicates. */
   private def finishCurate(exact: DataFrame, pairs: DataFrame): DataFrame = {
-    val losers = pairs.select(col("id_b").as("doc_id")).distinct()
+    val losers = pairs.select(col("id_b").as("doc_id"))
     TextOps.withLangId(exact.join(losers, Seq("doc_id"), "left_anti"))
       .select(col("doc_id"), col("text"), col("predicted_lang"), col("n_words"))
   }
@@ -181,7 +188,7 @@ object Pipeline {
     * the cluster {1,3,9}, but 3 is never a pair's greater member, so the
     * pairwise rule keeps BOTH 1 and 3 — the cluster rule keeps only 1.
     * Costs the component iteration (O(diameter) rounds over (id, label)
-    * pairs) on top of curate's four shuffles; the p2 oracle replays it
+    * pairs) on top of curate's shuffles; the p2 oracle replays it
     * with a recursive-CTE transitive closure. */
   def curateClustered(docs: DataFrame, cfg: Config = Config()): DataFrame = {
     val repart =
@@ -277,22 +284,26 @@ object Pipeline {
       log.warn(s"resume: committed extract at $outPath/extracted was built " +
         s"with ${committedFingerprint.getOrElse("<no fingerprint>")}; " +
         s"this run wants '$fingerprint' — re-parsing")
-    if (reusable)
-      log.info(s"resume: reusing committed extract at $outPath/extracted")
-    else {
-      val docs = SgmlExtract.readDocs(spark, inPath, format).toDF()
-      val repart =
-        if (cfg.partitions > 0)
-          SgmlExtract.sizeAwareRepartition(docs, cfg.partitions)
-        else docs
-      SgmlExtract.extractDf(repart, cfg.extract)
-        .withColumn("__pid", spark_partition_id())
-        .write.mode("overwrite").parquet(s"$outPath/extracted")
-      val out = fs.create(metaPath, true)
-      try out.write(fingerprint.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-    val extracted = spark.read.parquet(s"$outPath/extracted")
+    // The fresh branch re-reads with the schema it just wrote (no
+    // inference job); a resumed product's schema is not known here.
+    val extracted =
+      if (reusable) {
+        log.info(s"resume: reusing committed extract at $outPath/extracted")
+        spark.read.parquet(s"$outPath/extracted")
+      } else {
+        val docs = SgmlExtract.readDocs(spark, inPath, format).toDF()
+        val repart =
+          if (cfg.partitions > 0)
+            SgmlExtract.sizeAwareRepartition(docs, cfg.partitions)
+          else docs
+        val product = SgmlExtract.extractDf(repart, cfg.extract)
+          .withColumn("__pid", spark_partition_id())
+        product.write.mode("overwrite").parquet(s"$outPath/extracted")
+        val out = fs.create(metaPath, true)
+        try out.write(fingerprint.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        finally out.close()
+        spark.read.schema(product.schema).parquet(s"$outPath/extracted")
+      }
     val extractRows = extracted
       .groupBy(col("__pid").as("partition_id"))
       .agg(count(lit(1)).as("docs"),
@@ -304,26 +315,48 @@ object Pipeline {
         col("errors"),
         lit(null).cast("long").as("dropped_buckets"),
         lit(null).cast("long").as("dropped_rows"))
-    // Stages 3-5 inlined (vs curateExtracted) so the banded frame is
-    // SHARED between pair generation and the cap-audit lineage row —
-    // a capped run must be auditable without a second signature pass.
+    // Stages 3-5 inlined (vs curateExtracted) so the valve's counted
+    // bands can be OBSERVED inside the curated write: the cap audit
+    // (dropped buckets and rows) rides the write's own window pass —
+    // no second signature pass, no re-aggregation of the bands.
     val exact = Dedup.swapCache("run-exact",
       exactStage(qualityStage(extracted.drop("__pid"))))
     val banded = Dedup.bandsOf(exact, "doc_id", "text")
+    val capped = cfg.maxBucket != Int.MaxValue
+    val capAudit = Observation("fuzzy_dedup_cap")
+    val bands =
+      if (!capped) banded
+      else {
+        val over = col("__n") > cfg.maxBucket
+        Dedup.dropOversized(
+          Dedup.withBucketSize(banded, Dedup.BandKeys, "doc_id")
+            .observe(capAudit,
+              count(when(over && col("__first"), 1)).as("dropped_buckets"),
+              count(when(over, 1)).as("dropped_rows")),
+          cfg.maxBucket)
+      }
     finishCurate(exact,
-      Dedup.verifiedPairsFromBands(banded, exact, "doc_id", "text",
-        cfg.minJaccard, cfg.maxBucket))
+      Dedup.verifiedPairsFromBands(bands, exact, "doc_id", "text",
+        cfg.minJaccard)) // already capped above
       .write.mode("overwrite").parquet(s"$outPath/curated")
     // Lineage LAST: per-partition extract metrics, plus the valve audit
     // row whenever a cap is active (zeros when nothing was dropped — the
-    // row's presence is the audit; reads banded from the capBuckets
-    // cache, no second signature pass). Uncapped runs have no valve to
-    // audit and skip the row rather than pay an extra banded pass.
+    // row's presence is the audit). Uncapped runs have no valve to audit
+    // and skip the row.
     val lineage =
-      if (cfg.maxBucket == Int.MaxValue) extractRows
-      else extractRows.unionByName(
-        Dedup.droppedBucketStats(banded, Seq("band", "band_hash"),
-            cfg.maxBucket)
+      if (!capped) extractRows
+      else {
+        // With no verified pair, adaptive execution drops the empty loser
+        // branch of the anti-join from the final plan, and the metrics
+        // observed inside it with it: only then count over the bands.
+        val observed = capAudit.get
+        val stats =
+          if (observed.nonEmpty)
+            spark.range(1).select(
+              lit(observed("dropped_buckets")).as("dropped_buckets"),
+              lit(observed("dropped_rows")).as("dropped_rows"))
+          else Dedup.droppedBucketStats(banded, Dedup.BandKeys, cfg.maxBucket)
+        extractRows.unionByName(stats
           .select(lit(runId).as("run_id"),
             lit("fuzzy_dedup_cap").as("stage"),
             lit(null).cast("int").as("partition_id"),
@@ -332,6 +365,7 @@ object Pipeline {
             lit(null).cast("long").as("spans"),
             lit(null).cast("long").as("errors"),
             col("dropped_buckets"), col("dropped_rows")))
+      }
     lineage.write.mode("overwrite").parquet(s"$outPath/lineage")
   }
 }

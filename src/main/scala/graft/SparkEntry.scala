@@ -294,8 +294,9 @@ object SparkEntry {
           col("n_words").cast("long").as("n_words"))),
     "p1_curate" -> ((s, dir) => {
       // the whole engine in one plan: parse → quality filter → exact
-      // dedup → minhash fuzzy dedup → lang-id, four shuffles total;
-      // the oracle replays the identical pipeline in SQL from scratch
+      // dedup → minhash fuzzy dedup (one band shuffle; uncapped here, so
+      // no valve window) → loser anti-join → lang-id; the oracle replays
+      // the identical pipeline in SQL from scratch
       // doc_id stays the contract STRING — the exact-dedup window and the
       // pair ordering compare lexicographically, and the oracle mirrors
       // that with VARCHAR ids
@@ -1753,7 +1754,7 @@ object SparkEntry {
         |  FROM w, t)
         |SELECT d.doc_id, d.lang, r.n_stratum, r.w_stratum, r.rate_permille,
         |  ${bucketSql("d.doc_id")} AS bucket
-        |FROM documents d JOIN r ON r.lang = d.lang
+        |FROM documents d JOIN r ON r.lang IS NOT DISTINCT FROM d.lang
         |WHERE ${bucketSql("d.doc_id")} < r.rate_permille""".stripMargin,
     // s5: the oracle replays the two-phase heap top-k as the window it is
     // semantically equivalent to (feasible at oracle SF)

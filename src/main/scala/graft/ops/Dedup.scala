@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for the training-data pipeline, in increasing
@@ -49,33 +50,41 @@ object Dedup {
     * (verifiedPairsOf, simhashPairs, Similarity.embeddingNearDupsOf):
     * keep only rows whose `keyCols` group has ≤ maxBucket members.
     *
-    * The pre-pass matters: filtering collect_list OUTPUT by size still
-    * materializes the mega bucket inside one aggregation buffer first —
-    * the exact OOM the valve exists to prevent. So when a cap is set, a
-    * count aggregation (map-side partials, tiny (key, n) result) runs
-    * first and a left-semi join keeps only rows of surviving buckets;
-    * the extra shuffle is the price of the guarantee and is only paid
-    * when the valve is ON. Dropped buckets are dropped WHOLE — their
-    * members are boilerplate/template mass better handled by exact dedup
-    * upstream; droppedBucketStats counts what the cap discarded. At the
-    * default Int.MaxValue this is the identity (oracle parity at test
-    * SFs: zero plan change). */
+    * Filtering collect_list OUTPUT by size would still materialize the
+    * mega bucket inside one aggregation buffer first — the exact OOM the
+    * valve exists to prevent. So each row first learns its bucket's size
+    * from a window count (withBucketSize) and rows of oversized buckets
+    * are filtered out below the collect. The window's exchange on the
+    * bucket key is the one the following collect aggregation needs
+    * anyway, so valve and collect share ONE shuffle with no cache, and
+    * WindowExec spills its per-bucket buffer, so a mega bucket is counted
+    * without ever being held in memory. Dropped buckets are dropped
+    * WHOLE — their members are boilerplate/template mass better handled
+    * by exact dedup upstream; droppedBucketStats counts what the cap
+    * discarded. At the default Int.MaxValue this is the identity (oracle
+    * parity at test SFs: zero plan change). */
   private[ops] def capBuckets(banded: DataFrame, keyCols: Seq[String],
-      maxBucket: Int): DataFrame =
+      idCol: String, maxBucket: Int): DataFrame =
     if (maxBucket == Int.MaxValue) banded
-    else {
-      // The banded frame feeds BOTH the count pre-pass and the semi-join
-      // probe; uncached that runs the signature UDF pass (the dominant
-      // cost) over every document twice. swapCache bounds it to ~one
-      // computation + a small (doc_id, band, hash) cache — banded rows
-      // are a few dozen bytes/doc, tiny next to the text they derive from.
-      val b = swapCache(s"capBuckets:${keyCols.mkString(",")}", banded)
-      val ok = b.groupBy(keyCols.map(col): _*)
-        .agg(count(lit(1)).as("__n"))
-        .filter(col("__n") <= maxBucket)
-        .select(keyCols.map(col): _*)
-      b.join(ok, keyCols, "left_semi")
-    }
+    else dropOversized(withBucketSize(banded, keyCols, idCol), maxBucket)
+
+  /** `banded` plus two columns from one window over its `keyCols` bucket
+    * (ordered by `idCol`): `__n`, the bucket's size, and `__first`, true
+    * on exactly one row of each bucket — so a caller can count the
+    * buckets and rows a cap drops from the rows themselves
+    * (Pipeline.run observes them inside its write). */
+  private[graft] def withBucketSize(banded: DataFrame, keyCols: Seq[String],
+      idCol: String): DataFrame = {
+    val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col(idCol))
+    banded.select(col("*"),
+      count(lit(1)).over(w.rowsBetween(Window.unboundedPreceding,
+        Window.unboundedFollowing)).as("__n"),
+      (row_number().over(w) === 1).as("__first"))
+  }
+
+  /** The valve's filter over a withBucketSize frame. */
+  private[graft] def dropOversized(sized: DataFrame, maxBucket: Int): DataFrame =
+    sized.filter(col("__n") <= maxBucket).drop("__n", "__first")
 
   /** Audit row for a capped run: how many buckets/rows the valve dropped
     * (one aggregate over the same banded frame — production pipelines log
@@ -103,6 +112,8 @@ object Dedup {
   val NumHashes = 64
   val Bands = 16 // 16 bands × 4 rows: ~threshold (1/16)^(1/4) ≈ 0.5 Jaccard
   val RowsPerBand: Int = NumHashes / Bands
+  /** The bucket key of bandsOf's rows. */
+  private[graft] val BandKeys = Seq("band", "band_hash")
 
   // ---- minhash scheme, shared bit-for-bit with the DuckDB oracle ----
   // shingle hash : base-31 polynomial over Unicode code points, mod 2^32
@@ -223,17 +234,20 @@ object Dedup {
     verifiedPairsFromBands(bandsOf(d, idCol, textCol), d, idCol, textCol,
       minJaccard, maxBucket)
 
-  /** `verifiedPairsOf` over a PRE-BUILT banded frame — lets a caller
-    * (Pipeline.run) share one banded computation between pair generation
-    * and the droppedBucketStats lineage audit. */
+  /** `verifiedPairsOf` over a PRE-BUILT banded frame. When capped, the
+    * valve's window count and the bucket collect share ONE shuffle on
+    * (band, band_hash) (see capBuckets), so the cap costs no extra stage.
+    * Pipeline.run passes bands it has already capped itself (its cap
+    * audit is observed on the counted rows) with maxBucket =
+    * Int.MaxValue. */
   def verifiedPairsFromBands(banded: DataFrame, d: DataFrame,
       idCol: String, textCol: String,
       minJaccard: Double, maxBucket: Int = Int.MaxValue): DataFrame = {
-    val bands = capBuckets(banded, Seq("band", "band_hash"), maxBucket)
+    val bands = capBuckets(banded, BandKeys, idCol, maxBucket)
     val cands = bands
       .groupBy(col("band"), col("band_hash"))
       .agg(collect_list(col(idCol)).as("ids"))
-      .filter(size(col("ids")) > 1 && size(col("ids")) <= maxBucket)
+      .filter(size(col("ids")) > 1)
       .select(explode(col("ids")).as("id_a"), col("ids"))
       .select(col("id_a"), explode(col("ids")).as("id_b"))
       .filter(col("id_a") < col("id_b"))
@@ -523,7 +537,7 @@ object Dedup {
             .bitwiseAND(lit(0xFFFFL)).as("band_val"))): _*)).as("bb"))
       .select(col("doc_id"), col("simhash"),
         col("bb.band").as("band"), col("bb.band_val").as("band_val"))
-    val banded = capBuckets(banded0, Seq("band", "band_val"), maxBucket)
+    val banded = capBuckets(banded0, Seq("band", "band_val"), "doc_id", maxBucket)
     banded
       .groupBy(col("band"), col("band_val"))
       .agg(collect_list(struct(col("doc_id"), col("simhash"))).as("xs"))

@@ -144,7 +144,10 @@ object Sampling {
         StructField("n_stratum", LongType, nullable = false),
         StructField("w_stratum", LongType, nullable = false),
         StructField("rate_permille", LongType, nullable = false))))
-    d.join(broadcast(rates), Seq(stratumCol))
+    // null-safe: a null stratum is one stratum in the counts above, so
+    // it keeps its rate here too (an equi-join would drop its rows)
+    val r = rates.withColumnRenamed(stratumCol, "__stratum")
+    d.join(broadcast(r), d(stratumCol) <=> r("__stratum")).drop("__stratum")
       .withColumn("bucket", bucket1000(col(idCol)))
       .filter(col("bucket") < col("rate_permille"))
   }

@@ -788,7 +788,7 @@ object Similarity {
   def embeddingNearDupsOf(emb: DataFrame, minSim: Double = 0.95,
       nPlanes: Int = DefaultPlanes, maxBucket: Int = Int.MaxValue): DataFrame = {
     val bucketed = Dedup.capBuckets(
-      lshBucketsOf(emb, nPlanes, nTables = 1), Seq("bucket"), maxBucket)
+      lshBucketsOf(emb, nPlanes, nTables = 1), Seq("bucket"), "vec_id", maxBucket)
     bucketed
       .groupBy(col("bucket"))
       .agg(collect_list(struct(col("vec_id"), col("embedding"))).as("xs"))

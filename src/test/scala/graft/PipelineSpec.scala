@@ -182,4 +182,83 @@ class PipelineSpec extends AnyFunSuite {
     val none = Pipeline.dropAudit(extracted).collect().head
     assert(none.getAs[Long]("dropped_buckets") == 0L)
   }
+
+  test("run(): the cap audit observed inside the write equals dropAudit") {
+    // the whale cohort of the test above (its buckets exceed the cap)
+    // plus a near-dup pair the fuzzy stage must still drop. A verified
+    // pair keeps the loser branch in the plan, so the audit comes from
+    // the metrics observed inside the curated write
+    val words = quality.split(" ")
+    val whale = (1 to 12).map { i =>
+      f"t$i%02d" -> words.updated(i % words.length,
+        words(i % words.length).toUpperCase).mkString(" ")
+    }
+    val near = Seq("n1" -> "der hund und die katze sind nicht in dem haus und das ist gut so",
+      "n2" -> "der hund und die katze sind nicht in dem haus und das ist gut so ja")
+    val dir = java.nio.file.Files.createTempDirectory("pipeline").toString
+    docsOf(whale ++ near: _*).write.mode("overwrite").parquet(s"$dir/in")
+    val cfg = Pipeline.Config(maxBucket = 4)
+    Pipeline.run(spark, s"$dir/in", s"$dir/out", cfg, runId = "t3")
+    val curated = spark.read.parquet(s"$dir/out/curated")
+      .collect().map(_.getString(0)).toSet
+    assert(curated == whale.map(_._1).toSet + "n1", curated)
+    val cap = spark.read.parquet(s"$dir/out/lineage")
+      .filter("stage = 'fuzzy_dedup_cap'").collect()
+    assert(cap.length == 1)
+    val audit = Pipeline.dropAudit(
+      SgmlExtract.extractDf(docsOf(whale ++ near: _*), cfg.extract), cfg)
+      .collect().head
+    assert(audit.getAs[Long]("dropped_buckets") > 0L)
+    assert(cap.head.getAs[Long]("dropped_buckets") == audit.getAs[Long]("dropped_buckets"))
+    assert(cap.head.getAs[Long]("dropped_rows") == audit.getAs[Long]("dropped_rows"))
+  }
+
+  /** Jobs one `Pipeline.run` pass issues, counted by a SparkListener. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    // listener events arrive asynchronously: drain the bus on both sides
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    def drain(): Unit = bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    drain()
+    sc.addSparkListener(l)
+    try { body; drain() } finally sc.removeSparkListener(l)
+    jobs.get
+  }
+
+  test("run(): one pass issues a pinned number of Spark jobs") {
+    // every stage non-empty: an exact pair, a near pair, a junk doc and
+    // two distinct survivors. A later edit that adds a pass (a re-read,
+    // a recount, a schema inference) moves this number.
+    val dir = java.nio.file.Files.createTempDirectory("pipeline").toString
+    docsOf("a" -> quality, "b" -> quality, "c" -> (quality + " extra"),
+        "d" -> "short junk",
+        "e" -> "der hund und die katze sind nicht in dem haus und das ist gut so")
+      .write.mode("overwrite").parquet(s"$dir/in")
+    val jobs = jobsOf(Pipeline.run(spark, s"$dir/in", s"$dir/out",
+      runId = "j1", resume = false))
+    assert(spark.read.parquet(s"$dir/out/curated").count() == 2)
+    assert(jobs == 16, s"Pipeline.run issued $jobs Spark jobs (pinned 16)")
+  }
+
+  test("quality stage: a 20k-span doc clears in linear time") {
+    // the span text must be built in linear time: a concat that copies
+    // its growing prefix per span is quadratic, and the quality filter
+    // evaluates the text once per predicate
+    val n = 20000
+    val span = "the quick brown fox jumps over the lazy dog now "
+    val extracted = spark.range(1).selectExpr("'big' AS doc_id",
+      s"transform(sequence(1, $n), i -> named_struct('kind', 'text', " +
+        s"'text', '$span', 'media_ref', CAST(NULL AS STRING), 'offset', i)) AS spans",
+      "CAST(array() AS array<struct<code:string,off:int,detail:string>>) AS errors")
+    val t0 = System.nanoTime()
+    val out = Pipeline.qualityStage(extracted).collect()
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(out.map(_.getString(1)).toSeq == Seq(span * n))
+    assert(secs < 5.0, f"quality stage took $secs%.1f s on $n spans")
+  }
 }

@@ -63,7 +63,9 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     "e5_ann_recall"         -> 9, // union of FIVE knn legs (pq/ivfpq: +1 window, +1 agg each) + recall aggs
     "e6_knn_pq"             -> 1, // encode + ADC explode are narrow; the per-query top-k window is the only exchange
     "e7_knn_ivfpq"          -> 1, // broadcast probe join + ADC are narrow; one top-k window
-    "p1_curate"             -> 4, // quality→exact-dedup→fuzzy→lang-id stages
+    "p1_curate"             -> 4, // band collect + candidate distinct + BOTH sides of
+    // the loser anti-join (sort-merge with AQE off; the losers carry no
+    // distinct — the join's own exchange on doc_id is the only one there)
     "p2_curate_clustered"   -> 2, // keeper semi-join shuffles BOTH sides since the
     // path-halving rewrite: keepers come out of the halving join, so their
     // partitioning no longer lines up with doc_id. The right shape anyway —
@@ -144,26 +146,40 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ops.count(_ == "InMemoryTableScanExec") > 0, ops.mkString(", "))
   }
 
-  test("mega-bucket valve plans a semi-join BEFORE the collect aggregation") {
+  test("mega-bucket valve plans a window count + filter BELOW the collect, no extra shuffle") {
+    import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
     import org.apache.spark.sql.functions._
     import graft.ops.Dedup
     val sh = udf((t: String) => Dedup.simhash(t))
     val hashes = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"), sh(col("text")).as("simhash"))
-    def ops(maxBucket: Int): Seq[String] =
-      Dedup.simhashPairsOf(hashes, maxBucket = maxBucket)
-        .queryExecution.executedPlan.collect { case p => p.getClass.getSimpleName }
-    // valve off (default): no semi join, the pinned d5 shape
-    val uncapped = ops(Int.MaxValue)
-    assert(!uncapped.exists(n =>
-      n.contains("ShuffledHashJoin") || n.contains("SortMergeJoin")), uncapped)
-    // valve on: a size-gating join appears and nothing degrades to
-    // cartesian — the structural guarantee that a hot bucket is filtered
-    // out before any collect_list buffers it
-    val capped = ops(1000)
-    assert(capped.exists(n => n.contains("ShuffledHashJoin") ||
-      n.contains("SortMergeJoin") || n.contains("BroadcastHashJoin")), capped)
-    assert(!capped.exists(_ == "CartesianProductExec"))
+    def plan(maxBucket: Int): SparkPlan =
+      Dedup.simhashPairsOf(hashes, maxBucket = maxBucket).queryExecution.executedPlan
+    def names(p: SparkPlan): Seq[String] = p.collect { case n => n.getClass.getSimpleName }
+    // valve off (default): no window, the pinned d5 shape
+    val uncapped = names(plan(Int.MaxValue))
+    assert(!uncapped.contains("WindowExec"), uncapped)
+    // valve on: the collect aggregation's subtree holds the window count
+    // and its size filter — a hot bucket is filtered out before any
+    // collect_list buffers it — and the window's exchange on the bucket
+    // key is the collect's own: no join, no extra shuffle, no cartesian
+    val capped = plan(1000)
+    val collect = capped.collectFirst {
+      case a if a.getClass.getSimpleName == "ObjectHashAggregateExec" &&
+        a.toString.contains("collect_list") => a
+    }
+    assert(collect.nonEmpty, names(capped))
+    val below = names(collect.get)
+    assert(below.contains("WindowExec"), below)
+    assert(collect.get.exists {
+      case f: FilterExec => f.condition.references.exists(_.name == "__n")
+      case _ => false
+    }, below)
+    val all = names(capped)
+    assert(!all.exists(_.contains("Join")), all)
+    assert(!all.contains("CartesianProductExec"), all)
+    assert(all.count(_ == "ShuffleExchangeExec") == uncapped.count(_ == "ShuffleExchangeExec"),
+      s"capped: $all\nuncapped: $uncapped")
   }
 
   test("flagship extract leg is a single stage: zero exchanges of any kind") {

@@ -118,6 +118,31 @@ class SamplingPiiSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("temperature sampling: a null stratum is a stratum, not silently dropped") {
+    import spark.implicits._
+    // 400 "en" rows and 100 rows with no stratum: the null rows count in
+    // n_total / sum_w, so they must also get (and be sampled at) a rate
+    val docs = (0L until 500L).map(i => (i, if (i < 400) Some("en") else None))
+      .toDF("doc_id", "lang")
+    val out = Sampling.withTemperatureRates(docs, "doc_id", "lang").collect()
+    val nulls = out.filter(_.isNullAt(out.head.fieldIndex("lang")))
+    // weights 20 (en) and 10 (null), n_total 500: rate = 500·w·500/(30·n)
+    assert(nulls.nonEmpty)
+    nulls.foreach { r =>
+      assert(r.getAs[Long]("n_stratum") == 100L)
+      assert(r.getAs[Long]("w_stratum") == 10L)
+      assert(r.getAs[Long]("rate_permille") == 833L)
+      assert(r.getAs[Long]("bucket") < 833L)
+    }
+    val en = out.filter(r => !r.isNullAt(r.fieldIndex("lang")))
+    assert(en.nonEmpty && en.forall(_.getAs[Long]("rate_permille") == 416L))
+    // exactly the rows whose bucket is under their stratum's rate
+    val expected = docs.withColumn("b", Sampling.bucket1000(col("doc_id")))
+      .filter(when(col("lang").isNull, col("b") < 833).otherwise(col("b") < 416))
+      .count()
+    assert(out.length == expected)
+  }
+
   test("split leakage: pairs are real near-dups with endpoints in different splits") {
     import graft.ops.{Audit, Dedup}
     val leaks = Audit.splitLeakage(spark, sf).collect()
