@@ -146,7 +146,11 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ops.count(_ == "InMemoryTableScanExec") > 0, ops.mkString(", "))
   }
 
-  test("mega-bucket valve plans a window count + filter BELOW the collect, no extra shuffle") {
+  // Logically the valve is a semi-join of the banded rows against the set
+  // of buckets of size ≤ maxBucket; it is now evaluated as a window count
+  // plus a filter rather than as a physical join. The guarantee checked
+  // is the same: rows of an oversized bucket are gone before the collect.
+  test("mega-bucket valve plans a semi-join BEFORE the collect aggregation") {
     import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
     import org.apache.spark.sql.functions._
     import graft.ops.Dedup
