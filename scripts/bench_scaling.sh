@@ -1,11 +1,12 @@
 #!/usr/bin/env bash
 # Two-parallelism scaling evidence (BASELINE.md protocol, north-rule proxy).
 #
-# Runs the IDENTICAL extraction job + input at N=1 executor (2 cores) and
-# 4N=4 executors (8 cores), each level its own driver JVM + real executor
-# JVMs. Executor JVMs are sized honestly (ActiveProcessorCount=cores)
-# so each behaves like a real 2-core executor — otherwise a level borrows
-# the idle cores for GC/compilation and the efficiency ratio is meaningless.
+# Runs the IDENTICAL extraction job + input at N=1 executor and 4N=4
+# executors, each level its own application JVM + real executor JVMs. Executor
+# JVMs are sized honestly (ActiveProcessorCount=cores) so each behaves
+# like a real executor of that size — otherwise a level borrows the idle
+# cores for GC/compilation and the efficiency ratio is meaningless.
+# Cores and heaps are sized from the host (nproc, /proc/meminfo).
 #
 # Usage: scripts/bench_scaling.sh [sf_dir] [amp]
 set -euo pipefail
@@ -18,38 +19,51 @@ CP="$JAR:/opt/spark/jars/*"
 
 [ -f "$JAR" ] || sbt -batch package
 
+# Host sizing. Executors get 2 cores where 4N = 4 executors fits the host
+# (>= 8 cores; the recorded protocol), else 1 core. Heaps: half of
+# MemTotal clamped to [2, 8] GiB for the application JVM, and the same
+# half split over the 4N level's 4 executors plus that JVM, clamped to
+# [1, 4] GiB per executor.
+NPROC=$(nproc)
+EXEC_CORES=$(( NPROC >= 8 ? 2 : 1 ))
+MEM_MB=$(awk '/^MemTotal:/ {print int($2 / 1024)}' /proc/meminfo)
+MAIN_GB=$(( MEM_MB / 2048 )); MAIN_GB=$(( MAIN_GB < 2 ? 2 : MAIN_GB > 8 ? 8 : MAIN_GB ))
+EXEC_MB=$(( MEM_MB / 2 / 5 )); EXEC_MB=$(( EXEC_MB < 1024 ? 1024 : EXEC_MB > 4096 ? 4096 : EXEC_MB ))
+
 # One parallelism level = one driver JVM + real executor JVMs via Spark's
-# local-cluster master: N executors × 2 cores × 4 GiB each. Executor JVMs
+# local-cluster master: N executors × EXEC_CORES × EXEC_MB each. Executor JVMs
 # are sized honestly (ActiveProcessorCount=cores, ParallelGC via
 # Bench.session / spark.executor.extraJavaOptions) — the closest
 # single-machine proxy for "spark-submit at N and 4N executors".
 #
-# Why 2-core executors: the per-executor resources must be IDENTICAL at
+# Why small executors: the per-executor resources must be IDENTICAL at
 # both levels and the host must be able to supply 4N executors without
 # cross-executor interference. With 4×2=8 of 32 cores busy, per-core
 # speed is the same at both levels (measured); at 4×7=28 busy cores the
 # box itself saturates (shared memory bandwidth / L3 / frequency) and
 # per-core speed drops ~28% — an artifact a real 4N-executor cluster,
 # where every node is equally loaded at both sizes, does not have. The
-# 28-core saturation point is still reported in BENCH/BASELINE.md.
+# 28-core saturation point is still reported in BENCH/BASELINE.md. On a
+# 4-core host the 4N level uses every core, so the same saturation
+# applies to its number.
 run_level() { # n_executors
   local n="$1"
-  local total=$((n * 2))
+  local total=$((n * EXEC_CORES))
   SPARK_GRAFT_SF_DIR="$SF_DIR" SPARK_GRAFT_AMP="$AMP" SPARK_GRAFT_CPUS="$total" \
     SPARK_HOME=/opt/spark SPARK_SCALA_VERSION=2.13 \
-    java -Xmx8g -XX:+UseParallelGC \
-    "-Dspark.master=local-cluster[$n,2,4096]" \
+    java "-Xmx${MAIN_GB}g" -XX:+UseParallelGC \
+    "-Dspark.master=local-cluster[$n,$EXEC_CORES,$EXEC_MB]" \
     -cp "$CP" graft.Bench extract 2>/dev/null | tail -1
 }
 
-echo "[scaling] corpus warm-up / generation (32 cores)" >&2
-SPARK_GRAFT_SF_DIR="$SF_DIR" SPARK_GRAFT_AMP="$AMP" SPARK_GRAFT_CPUS=32 \
-  java -Xmx48g -cp "$CP" graft.Bench gen 2>/dev/null || true
+echo "[scaling] corpus warm-up / generation ($NPROC cores)" >&2
+SPARK_GRAFT_SF_DIR="$SF_DIR" SPARK_GRAFT_AMP="$AMP" SPARK_GRAFT_CPUS="$NPROC" \
+  java "-Xmx${MAIN_GB}g" -cp "$CP" graft.Bench gen 2>/dev/null || true
 
-echo "[scaling] N=1 executor (2 cores)" >&2
+echo "[scaling] N=1 executor ($EXEC_CORES cores)" >&2
 J8=$(run_level 1)
 echo "$J8"
-echo "[scaling] 4N=4 executors (8 cores)" >&2
+echo "[scaling] 4N=4 executors ($((4 * EXEC_CORES)) cores)" >&2
 J32=$(run_level 4)
 echo "$J32"
 

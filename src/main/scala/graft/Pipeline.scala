@@ -304,12 +304,10 @@ object Pipeline {
         finally out.close()
         spark.read.schema(product.schema).parquet(s"$outPath/extracted")
       }
+    val totals = SgmlExtract.extractTotals()
     val extractRows = extracted
       .groupBy(col("__pid").as("partition_id"))
-      .agg(count(lit(1)).as("docs"),
-        sum(expr("aggregate(spans, 0L, (a, s) -> a + length(coalesce(s.text, '')))")).as("bytes"),
-        sum(size(col("spans")).cast("long")).as("spans"),
-        sum(size(col("errors")).cast("long")).as("errors"))
+      .agg(totals.head, totals.tail: _*)
       .select(lit(runId).as("run_id"), lit("extract").as("stage"),
         col("partition_id"), col("docs"), col("bytes"), col("spans"),
         col("errors"),

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.util.control.NonFatal
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sgml._
 
@@ -16,8 +17,10 @@ final case class Extracted(doc_id: String, spans: Seq[OutSpan], errors: Seq[ErrR
 
 /** The Spark surface of the extraction engine (SURVEY.md §1.2, §3 E1).
   *
-  * One narrow `mapPartitions` stage: decode → tokenize → build → emit, one
-  * doc per row, events never leave the task. Columnar at rest (Parquet/
+  * One kernel path, the `extract_spans` Catalyst expression
+  * (graft.functions.ExtractSpansExpr): decode → tokenize → build → emit,
+  * one doc per row, events never leave the task, and the planner sees
+  * every operator around the parse. Columnar at rest (Parquet/
   * Iceberg), row-oriented only inside the kernel. No shuffle on the bulk
   * path; shuffles exist only before (size-aware repartition for skew) and
   * after (writes / aggregations).
@@ -39,54 +42,59 @@ object SgmlExtract {
       boilerplate = boilerplate)
   }
 
-  /** Parse one interleaved doc with the GIVEN parser instance (reset
-    * first): text spans feed the incremental parser in order, media spans
-    * pass through at their offsets (F14). The parser is reused across the
-    * partition's docs — per-doc construction of the tokenizer/builder/
-    * buffers dominated small-doc throughput (measured: GC-bound at 32
-    * cores before reuse). */
-  def parseDocWith(p: SgmlParser, doc: Doc, cfg: ParserConfig): Extracted = {
-    p.reset()
-    if (doc.spans != null) doc.spans.foreach { s =>
-      s.kind match {
-        case "media" => p.media(s.media_ref, s.offset)
-        case _       => if (s.text != null) p.feed(s.text, s.offset)
+  /** One reused parser per task or thread, and the one place a parse
+    * recovers from a throw: reset → `feed` → finish → `ok`. Reuse matters —
+    * per-doc construction of the tokenizer/builder/buffers dominated
+    * small-doc throughput (measured: GC-bound at 32 cores before reuse).
+    * A throw replaces the parser (its state is unknown) and goes to `err`,
+    * the caller's error-row builder: a poisoned doc is a row, never a
+    * failed task. Fatal errors, interrupts and task kills propagate;
+    * `StackOverflowError` is caught because the tree walks (SpanEmitter,
+    * Serializer) still recurse, so deep nesting overflows them. */
+  final class ParserSlot(cfg: ParserConfig) {
+    private var p = new SgmlParser(cfg)
+
+    private[graft] def parser: SgmlParser = p
+
+    def parse[A](feed: SgmlParser => Unit)(ok: ParseResult => A)(err: Throwable => A): A =
+      try { feed(p.reset()); ok(p.finish()) }
+      catch {
+        case e @ (NonFatal(_) | _: StackOverflowError) =>
+          p = new SgmlParser(cfg)
+          err(e)
       }
-    }
-    val r = p.finish()
-    Extracted(
-      doc.doc_id,
-      r.spans(cfg).map(s => OutSpan(s.kind, s.text, s.media_ref, s.offset)),
-      r.errors.map(e => ErrRow(e.code, e.off, e.detail)))
   }
 
-  /** Single-doc convenience (fresh parser). */
-  def parseDoc(doc: Doc, cfg: ParserConfig): Extracted =
-    try parseDocWith(new SgmlParser(cfg), doc, cfg)
-    catch {
-      case e: Throwable =>
-        Extracted(doc.doc_id, Seq.empty,
-          Seq(ErrRow("internal-error", 0, String.valueOf(e.getMessage).take(200))))
+  object ParserSlot {
+    /** Error-row detail: the message, or the throwable's class when it has
+      * none (a stack overflow). */
+    def detail(e: Throwable): String =
+      Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
+  }
+
+  /** Feed one doc's spans in order: text spans feed the incremental
+    * parser, media spans pass through at their offsets (F14). */
+  def feedSpans(p: SgmlParser, spans: Seq[InSpan]): Unit =
+    if (spans != null) spans.foreach { s =>
+      if (s.kind == "media") p.media(s.media_ref, s.offset)
+      else if (s.text != null) p.feed(s.text, s.offset)
     }
 
-  /** The flagship transform: Dataset[Doc] → Dataset[Extracted], one narrow
-    * stage (SURVEY.md §3: no shuffle; ParserConfig + ONE reused parser per
-    * partition, DTD cached once per JVM via HtmlDtd's lazy val). */
+  /** Single-doc in-JVM parse (fresh parser): the streaming assembler's
+    * parse and the reference the Spark path is tested against. */
+  def parseDoc(doc: Doc, cfg: ParserConfig): Extracted =
+    new ParserSlot(cfg).parse(feedSpans(_, doc.spans)) { r =>
+      Extracted(doc.doc_id,
+        r.spans(cfg).map(s => OutSpan(s.kind, s.text, s.media_ref, s.offset)),
+        r.errors.map(e => ErrRow(e.code, e.off, e.detail)))
+    }(e => Extracted(doc.doc_id, Seq.empty,
+      Seq(ErrRow("internal-error", 0, ParserSlot.detail(e)))))
+
+  /** The flagship transform, typed: a view over `extractDf`. A row whose
+    * `spans` is null comes back with null `spans` and `errors`. */
   def extract(ds: Dataset[Doc], config: Config): Dataset[Extracted] = {
     import ds.sparkSession.implicits._
-    ds.mapPartitions { it =>
-      val cfg = config.toParserConfig // per-partition, not per-doc
-      var parser = new SgmlParser(cfg)
-      it.map { doc =>
-        try parseDocWith(parser, doc, cfg)
-        catch {
-          case e: Throwable => // poisoned doc → error row, never a failed
-            parser = new SgmlParser(cfg) // state unknown after throw: replace
-            Extracted(doc.doc_id, Seq.empty,
-              Seq(ErrRow("internal-error", 0, String.valueOf(e.getMessage).take(200))))
-        }
-      }
-    }
+    extractDf(ds.toDF(), config).as[Extracted]
   }
 
   /** Production source: read a contract-schema table `(doc_id, spans)`
@@ -94,8 +102,7 @@ object SgmlExtract {
     * (`format = "iceberg"`, path = table identifier) — its jars are absent
     * in this sandbox (SURVEY.md §1.2), so local tests use the default
     * `parquet`; the adapter is exactly this format string. Columns are
-    * selected explicitly so pruning reaches the scan before the opaque
-    * kernel. */
+    * selected explicitly so pruning reaches the scan. */
   def readDocs(spark: SparkSession, path: String,
       format: String = "parquet"): Dataset[Doc] = {
     import spark.implicits._
@@ -106,8 +113,7 @@ object SgmlExtract {
 
   /** Wrap the driver corpus (`documents.parquet`: doc_id int64, text, lang,
     * source, n_chars) into the contract schema — one text span at offset 0.
-    * Columns pruned BEFORE the opaque kernel so the parquet scan reads only
-    * doc_id+text (pushdown stops at mapPartitions — SURVEY.md §4). */
+    * Columns pruned so the parquet scan reads only doc_id+text. */
   def wrapDocuments(spark: SparkSession, sfDir: String): Dataset[Doc] =
     wrapDocsDf(spark.read.parquet(s"$sfDir/documents.parquet"))
 
@@ -227,49 +233,37 @@ object SgmlExtract {
           lit(0).as("offset"))).as("spans"))
   }
 
+  /** The `extract_spans(spans, …)` column for `config`, every field
+    * bound; registers the SQL function on the session if absent. */
+  def extractSpans(spark: SparkSession, config: Config): Column = {
+    if (!spark.catalog.functionExists("extract_spans"))
+      graft.functions.ExtractSpansExpr.register(spark)
+    expr(s"extract_spans(spans, '${config.dialect}', '${config.space}', " +
+      s"${config.boilerplate}, ${config.maxErrors}, ${config.maxDocChars})")
+  }
+
   /** Columnar extraction via the native Catalyst expression
     * (graft.functions.ExtractSpansExpr): no Doc/Extracted encoder
     * round-trip, inputs stay UTF8String off the vectorized Parquet
-    * reader. Preferred at scale; `extract` (typed) has identical
-    * semantics. Registers the function on the session if absent. */
-  def extractDf(df: DataFrame, config: Config): DataFrame = {
-    val spark = df.sparkSession
-    if (!spark.catalog.functionExists("extract_spans"))
-      graft.functions.ExtractSpansExpr.register(spark)
-    df.select(col("doc_id"),
-        expr(s"extract_spans(spans, '${config.dialect}', '${config.space}', " +
-          s"${config.boilerplate})").as("r"))
+    * reader. (doc_id, spans) → (doc_id, spans, errors). */
+  def extractDf(df: DataFrame, config: Config): DataFrame =
+    df.select(col("doc_id"), extractSpans(df.sparkSession, config).as("r"))
       .select(col("doc_id"), col("r.spans").as("spans"), col("r.errors").as("errors"))
-  }
 
   /** Serialization sink (SURVEY.md §2.8 W1/W5): parse each doc and write
     * it back as canonical XML (attributes name-sorted, no self-closing
     * elements — deterministic byte-stable output). Narrow stage; used by
     * the round-trip conformance query (x5) and as the re-serialization
-    * path for downstream consumers that want markup, not spans. */
+    * path for downstream consumers that want markup, not spans. A throw
+    * surfaces as (xml_out = null, error != null), never as ''. */
   def serializeCanonical(ds: Dataset[Doc], config: Config): DataFrame = {
     import ds.sparkSession.implicits._
     ds.mapPartitions { it =>
-      val cfg = config.toParserConfig
-      var parser = new SgmlParser(cfg)
+      val slot = new ParserSlot(config.toParserConfig)
       it.map { doc =>
-        // mirror extract(): a throw replaces the possibly-corrupt reused
-        // parser and surfaces as (xml_out = null, error != null) instead
-        // of silently serializing a poisoned doc as ''
-        try {
-          parser.reset()
-          if (doc.spans != null) doc.spans.foreach { s =>
-            if (s.kind == "media") parser.media(s.media_ref, s.offset)
-            else if (s.text != null) parser.feed(s.text, s.offset)
-          }
-          val r = parser.finish()
+        slot.parse(feedSpans(_, doc.spans)) { r =>
           (doc.doc_id, Serializer.xml(r.content, canonical = true), null: String)
-        } catch {
-          case e: Throwable =>
-            parser = new SgmlParser(cfg) // state unknown after throw
-            (doc.doc_id, null: String,
-              "internal-error: " + String.valueOf(e.getMessage).take(200))
-        }
+        }(e => (doc.doc_id, null: String, "internal-error: " + ParserSlot.detail(e)))
       }
     }.toDF("doc_id", "xml_out", "error")
   }
@@ -317,20 +311,16 @@ object SgmlExtract {
     * `hash(doc_id)` — uniform over all partitions). The previous
     * branch/window/union design funnelled whale BYTES through a
     * single-partition window and re-read the source per branch — it cost
-    * more than it balanced once the parse kernel got fast.
-    *
-    * `whalePartitions` is retained for API compatibility; whales now
-    * share the one partition space with the uniformly-spread normals, so
-    * a dedicated whale band no longer helps. */
+    * more than it balanced once the parse kernel got fast. Whales share
+    * the one partition space with the uniformly-spread normals. */
   def sizeAwareRepartition(df: DataFrame, numPartitions: Int,
-      whaleChars: Long = 8L << 20, whalePartitions: Int = 0): DataFrame = {
-    val chars = expr("aggregate(spans, 0L, (acc, s) -> acc + length(coalesce(s.text, '')))")
+      whaleChars: Long = 8L << 20): DataFrame = {
     // limit BEFORE collect: the cap must bound the driver transfer itself,
     // not just check it after the fact (a corpus where most docs are
     // whales would otherwise OOM the driver before the check ran)
     val whaleIds = df
       .select(col("doc_id"))
-      .where(chars >= whaleChars)
+      .where(spanChars >= whaleChars)
       .limit(MaxDriverWhales + 1)
       .collect().map(_.getString(0)).sorted
     if (whaleIds.isEmpty || whaleIds.length > MaxDriverWhales)
@@ -369,6 +359,20 @@ object SgmlExtract {
     keys
   }
 
+  /** Chars of a doc's span texts (a null text counts 0): the size column
+    * of the lineage rows, the observed metrics and the whale test. */
+  def spanChars: Column =
+    expr("aggregate(spans, 0L, (acc, s) -> acc + length(coalesce(s.text, '')))")
+
+  /** docs, bytes, spans, errors over an extracted frame: the one aggregate
+    * list of every lineage row (batch, Resume, Pipeline.run) and of the
+    * observed metrics; `bytesAs` names the span-chars sum. */
+  def extractTotals(bytesAs: String = "bytes"): Seq[Column] = Seq(
+    count(lit(1)).as("docs"),
+    sum(spanChars).as(bytesAs),
+    sum(size(col("spans")).cast("long")).as("spans"),
+    sum(size(col("errors")).cast("long")).as("errors"))
+
   /** Attach observed metrics to an extracted DataFrame (SURVEY.md §7
     * step 4: `observe()` + CollectMetrics): docs/spans/errors/chars
     * counters computed inside the SAME job as whatever action consumes
@@ -376,27 +380,20 @@ object SgmlExtract {
     * `org.apache.spark.sql.Observation#get` after the action. */
   def withObservedMetrics(df: DataFrame,
       obs: org.apache.spark.sql.Observation): DataFrame = {
-    df.observe(obs,
-      count(lit(1)).as("docs"),
-      sum(size(col("spans")).cast("long")).as("spans"),
-      sum(size(col("errors")).cast("long")).as("errors"),
-      sum(expr("aggregate(spans, 0L, (a, s) -> a + length(coalesce(s.text, '')))"))
-        .as("chars"))
+    val totals = extractTotals(bytesAs = "chars")
+    df.observe(obs, totals.head, totals.tail: _*)
   }
 
   /** Per-partition lineage rows (run_id, partition_id, docs, spans, errors,
     * bytes) — computed in the same narrow stage as the parse, so
     * spark_partition_id() is the parse partition (FIXTURES.md lineage
     * schema; north rule "per-partition lineage + metrics"). */
-  def lineage(extracted: Dataset[Extracted], runId: String): DataFrame = {
+  def lineage(extracted: DataFrame, runId: String): DataFrame = {
+    val totals = extractTotals()
     extracted
       .withColumn("__pid", spark_partition_id())
       .groupBy(col("__pid").as("partition_id"))
-      .agg(
-        count(lit(1)).as("docs"),
-        sum(expr("aggregate(spans, 0L, (a, s) -> a + length(coalesce(s.text, '')))")).as("bytes"),
-        sum(size(col("spans")).cast("long")).as("spans"),
-        sum(size(col("errors")).cast("long")).as("errors"))
+      .agg(totals.head, totals.tail: _*)
       .withColumn("run_id", lit(runId))
       .select("run_id", "partition_id", "docs", "bytes", "spans", "errors")
   }

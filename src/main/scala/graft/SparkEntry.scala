@@ -22,7 +22,7 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame = {
     val docs = SgmlExtract.wrapDocumentsMarked(spark, "/root/testdata/sf0.001")
     val cfg = SgmlExtract.Config(dialect = "html4", space = "preserve")
-    SgmlExtract.extract(docs, cfg)
+    SgmlExtract.extractDf(docs.toDF(), cfg)
       .select(col("doc_id"), posexplode(col("spans")).as(Seq("pos", "span")))
       .select(col("doc_id"), col("pos"), col("span.kind"), col("span.text"),
         col("span.media_ref"), col("span.offset"))
@@ -31,7 +31,7 @@ object SparkEntry {
   private def extractPreserve(s: SparkSession, dir: String, marked: Boolean) = {
     val docs = if (marked) SgmlExtract.wrapDocumentsMarked(s, dir)
                else SgmlExtract.wrapDocuments(s, dir)
-    SgmlExtract.extract(docs, SgmlExtract.Config(dialect = "html4", space = "preserve"))
+    SgmlExtract.extractDf(docs.toDF(), SgmlExtract.Config(dialect = "html4", space = "preserve"))
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -40,7 +40,7 @@ object SparkEntry {
       extractPreserve(s, dir, marked = false)
         .select(
           col("doc_id"),
-          expr("aggregate(spans, '', (acc, sp) -> acc || sp.text)").as("text"),
+          expr("array_join(spans.text, '')").as("text"),
           size(col("spans")).cast("long").as("n_spans"))
     }),
     "x2_parse_markup_spans" -> ((s, dir) => {
@@ -59,7 +59,7 @@ object SparkEntry {
       SgmlExtract.extractDf(docs,
           SgmlExtract.Config(dialect = "html4", space = "preserve"))
         .select(col("doc_id"),
-          expr("aggregate(spans, '', (acc, sp) -> acc || sp.text)").as("recovered_text"),
+          expr("array_join(spans.text, '')").as("recovered_text"),
           size(col("errors")).cast("long").as("n_errors"),
           col("errors")(0)("code").as("first_error_code"),
           col("errors")(0)("offset").cast("long").as("first_error_off"))
@@ -76,7 +76,7 @@ object SparkEntry {
           SgmlExtract.Config(dialect = "html4", space = "preserve", boilerplate = true))
         .select(
           col("doc_id"),
-          expr("aggregate(spans, '', (acc, sp) -> acc || sp.text)").as("main_text"),
+          expr("array_join(spans.text, '')").as("main_text"),
           size(col("spans")).cast("long").as("n_spans"))
     }),
 
@@ -87,7 +87,7 @@ object SparkEntry {
       SgmlExtract.extractDf(docs,
           SgmlExtract.Config(dialect = "sgml", space = "preserve"))
         .select(col("doc_id"),
-          expr("aggregate(spans, '', (acc, sp) -> acc || sp.text)").as("text"),
+          expr("array_join(spans.text, '')").as("text"),
           size(col("errors")).cast("long").as("n_errors"))
     }),
 
@@ -330,7 +330,7 @@ object SparkEntry {
       val stream = s.readStream.schema(schema)
         .parquet(s"$dir/[d]ocuments.parquet")
       val curated = streaming.StreamingExtract.curatedStream(
-        streaming.StreamingExtract.extractStream(
+        SgmlExtract.extract(
           SgmlExtract.wrapDocsDf(stream),
           SgmlExtract.Config(dialect = "html4", space = "preserve")))
       val out = curated.select(md5(col("text")).as("content_hash"),
@@ -538,7 +538,7 @@ object SparkEntry {
     val s0 =
       """s0 AS MATERIALIZED (
         |  SELECT word, cnt,
-        |    ' ' || array_to_string(regexp_extract_all(word, '.'), ' ') || ' ' AS seg
+        |    ' ' || array_to_string(regexp_extract_all(word, '(?s).'), ' ') || ' ' AS seg
         |  FROM (
         |    SELECT w AS word, COUNT(*) AS cnt FROM (
         |      SELECT unnest(list_filter(

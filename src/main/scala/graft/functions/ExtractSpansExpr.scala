@@ -12,14 +12,17 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sgml.{ParserConfig, SgmlParser}
+import graft.sgml.{ParseResult, ParserConfig, SgmlParser}
 import graft.SgmlExtract
+import graft.SgmlExtract.ParserSlot
 
 /** Native Catalyst expression for the extraction kernel:
-  * `extract_spans(spans_array [, dialect [, space]])` →
-  * `struct<spans: array<span>, errors: array<err>>`.
+  * `extract_spans(spans_array [, dialect [, space [, boilerplate
+  * [, max_errors, max_doc_chars]]]])` →
+  * `struct<spans: array<span>, errors: array<err>>`. The one Spark path
+  * into the parser: the typed `SgmlExtract.extract` is a view over it.
   *
-  * Why an Expression and not the typed `mapPartitions` (SURVEY.md §7.6):
+  * Why an Expression and not a typed `mapPartitions` (SURVEY.md §7.6):
   * inputs arrive as Catalyst `ArrayData`/`UTF8String` straight off the
   * vectorized Parquet reader and results are built as `InternalRow`s —
   * the `Dataset[Doc]`/`Dataset[Extracted]` encoder round-trip (a measured
@@ -37,7 +40,8 @@ case class ExtractSpansExpr(
     dialect: String,
     space: String,
     maxErrors: Int = 100,
-    boilerplate: Boolean = false)
+    boilerplate: Boolean = false,
+    maxDocChars: Int = 64 << 20)
   extends UnaryExpression with CodegenFallback {
 
   import ExtractSpansExpr._
@@ -66,83 +70,79 @@ case class ExtractSpansExpr(
 
   @transient private lazy val cfg: ParserConfig =
     SgmlExtract.Config(dialect = dialect, space = space, maxErrors = maxErrors,
-      boilerplate = boilerplate).toParserConfig
+      maxDocChars = maxDocChars, boilerplate = boilerplate).toParserConfig
 
-  // One parser per thread: expression instances can be shared across the
-  // tasks of a local-mode executor, and the parser is stateful.
+  // One parser slot per thread: expression instances can be shared across
+  // the tasks of a local-mode executor, and the parser is stateful.
   //
-  // Input decode (VERDICT r1 #9, measured round 2): the per-doc
-  // `UTF8String.toString` was suspected as an allocation hotspot, and an
-  // allocation-free alternative exists (graft.functions.Utf8CharSeq +
-  // SgmlParser.feedChars — a per-thread reused char[] with an
-  // 8-bytes-per-long ASCII widening loop). Interleaved A/B at local[32],
-  // 4×7-core local-cluster, AND single-threaded all measured toString
-  // FASTER (5-15%): JDK compact strings make the scan read 1 byte/char
-  // vs the char[] path's 2, and String's UTF-8 decoder is intrinsified —
-  // both outweigh the per-doc allocation, which the young-gen collector
-  // absorbs. So toString stays, by measurement, and the buffer path
-  // remains available (tested by Utf8CharSeqSpec) for heap-constrained
-  // deployments.
-  @transient private lazy val parsers: ThreadLocal[SgmlParser] =
-    ThreadLocal.withInitial(() => new SgmlParser(cfg))
+  // Input decode: `UTF8String.toString` per text span. An allocation-free
+  // reused char[] decode measured 5-15% SLOWER (interleaved A/B at
+  // local[32], 4×7-core local-cluster and single-threaded): JDK compact
+  // strings make the scan read 1 byte/char vs the char[] path's 2, and
+  // String's UTF-8 decoder is intrinsified — both outweigh the per-doc
+  // allocation, which the young-gen collector absorbs.
+  @transient private lazy val slots: ThreadLocal[ParserSlot] =
+    ThreadLocal.withInitial(() => new ParserSlot(cfg))
 
   override def eval(input: InternalRow): Any = {
     val v = child.eval(input)
     if (v == null) return null
     val arr = v.asInstanceOf[ArrayData]
+    slots.get().parse(feed(_, arr))(toRow)(errorRow)
+  }
+
+  private def feed(p: SgmlParser, arr: ArrayData): Unit = {
     val (kindI, textI, refI, offI, nFields) = idx
-    try {
-      val p = parsers.get().reset()
-      val nIn = arr.numElements()
-      var i = 0
-      while (i < nIn) {
-        val row = arr.getStruct(i, nFields)
-        if (row != null) {
-          val kind = row.getUTF8String(kindI)
-          val off = if (row.isNullAt(offI)) 0 else row.getInt(offI)
-          if (kind != null && MediaKind.equals(kind)) {
-            val ref = row.getUTF8String(refI)
-            p.media(if (ref == null) null else ref.toString, off)
-          } else {
-            val t = row.getUTF8String(textI)
-            if (t != null) p.feed(t.toString, off)
-          }
+    val nIn = arr.numElements()
+    var i = 0
+    while (i < nIn) {
+      val row = arr.getStruct(i, nFields)
+      if (row != null) {
+        val kind = row.getUTF8String(kindI)
+        val off = if (row.isNullAt(offI)) 0 else row.getInt(offI)
+        if (kind != null && MediaKind.equals(kind)) {
+          val ref = row.getUTF8String(refI)
+          p.media(if (ref == null) null else ref.toString, off)
+        } else {
+          val t = row.getUTF8String(textI)
+          if (t != null) p.feed(t.toString, off)
         }
-        i += 1
       }
-      val r = p.finish()
-      val spans = r.spans(cfg)
-      val spanRows = new Array[Any](spans.length)
-      var j = 0
-      while (j < spans.length) {
-        val s = spans(j)
-        spanRows(j) = new GenericInternalRow(Array[Any](
-          UTF8String.fromString(s.kind),
-          if (s.text == null) null else UTF8String.fromString(s.text),
-          if (s.media_ref == null) null else UTF8String.fromString(s.media_ref),
-          s.offset))
-        j += 1
-      }
-      val errRows = new Array[Any](r.errors.length)
-      j = 0
-      while (j < r.errors.length) {
-        val e = r.errors(j)
-        errRows(j) = new GenericInternalRow(Array[Any](
-          UTF8String.fromString(e.code), e.off, UTF8String.fromString(e.detail)))
-        j += 1
-      }
-      new GenericInternalRow(Array[Any](
-        new GenericArrayData(spanRows), new GenericArrayData(errRows)))
-    } catch {
-      case t: Throwable => // poisoned row → error payload, never a failed task
-        parsers.remove() // parser state unknown after a throw
-        new GenericInternalRow(Array[Any](
-          new GenericArrayData(Array.empty[Any]),
-          new GenericArrayData(Array[Any](new GenericInternalRow(Array[Any](
-            UTF8String.fromString("internal-error"), 0,
-            UTF8String.fromString(String.valueOf(t.getMessage).take(200))))))))
+      i += 1
     }
   }
+
+  private def toRow(r: ParseResult): InternalRow = {
+    val spans = r.spans(cfg)
+    val spanRows = new Array[Any](spans.length)
+    var j = 0
+    while (j < spans.length) {
+      val s = spans(j)
+      spanRows(j) = new GenericInternalRow(Array[Any](
+        UTF8String.fromString(s.kind),
+        if (s.text == null) null else UTF8String.fromString(s.text),
+        if (s.media_ref == null) null else UTF8String.fromString(s.media_ref),
+        s.offset))
+      j += 1
+    }
+    val errRows = new Array[Any](r.errors.length)
+    j = 0
+    while (j < r.errors.length) {
+      val e = r.errors(j)
+      errRows(j) = new GenericInternalRow(Array[Any](
+        UTF8String.fromString(e.code), e.off, UTF8String.fromString(e.detail)))
+      j += 1
+    }
+    new GenericInternalRow(Array[Any](
+      new GenericArrayData(spanRows), new GenericArrayData(errRows)))
+  }
+
+  private def errorRow(t: Throwable): InternalRow =
+    new GenericInternalRow(Array[Any](
+      new GenericArrayData(Array.empty[Any]),
+      new GenericArrayData(Array[Any](new GenericInternalRow(Array[Any](
+        UTF8String.fromString("internal-error"), 0,
+        UTF8String.fromString(ParserSlot.detail(t))))))))
 
   override protected def withNewChildInternal(newChild: Expression): ExtractSpansExpr =
     copy(child = newChild)
@@ -182,7 +182,13 @@ object ExtractSpansExpr {
       s"extract_spans: $what must be a boolean literal, got $other")
   }
 
-  /** Builder used by the function registry: 1-4 args. */
+  private def litInt(e: Expression, what: String): Int = e match {
+    case Literal(i: java.lang.Integer, IntegerType) if i >= 0 => i
+    case other => throw new IllegalArgumentException(
+      s"extract_spans: $what must be a non-negative int literal, got $other")
+  }
+
+  /** Builder used by the function registry: 1-4 or 6 args. */
   def fromArgs(args: Seq[Expression]): ExtractSpansExpr = args match {
     case Seq(c)       => ExtractSpansExpr(c, "html4", "preserve")
     case Seq(c, d)    => ExtractSpansExpr(c, litStr(d, "dialect", Dialects), "preserve")
@@ -190,8 +196,11 @@ object ExtractSpansExpr {
                                              litStr(s, "space", Spaces))
     case Seq(c, d, s, b) => ExtractSpansExpr(c, litStr(d, "dialect", Dialects),
       litStr(s, "space", Spaces), boilerplate = litBool(b, "boilerplate"))
-    case _ => throw new IllegalArgumentException(
-      "extract_spans(spans[, dialect[, space[, boilerplate]]]) takes 1-4 arguments")
+    case Seq(c, d, s, b, me, mc) => ExtractSpansExpr(c, litStr(d, "dialect", Dialects),
+      litStr(s, "space", Spaces), litInt(me, "max_errors"), litBool(b, "boilerplate"),
+      litInt(mc, "max_doc_chars"))
+    case _ => throw new IllegalArgumentException("extract_spans(spans[, dialect[, space" +
+      "[, boilerplate[, max_errors, max_doc_chars]]]]) takes 1-4 or 6 arguments")
   }
 
   val info: ExpressionInfo = new ExpressionInfo(

@@ -59,7 +59,7 @@ object Bpe {
       .filter(col("word") =!= "")
       .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
       .withColumn("seg", concat(lit(" "),
-        array_join(expr("regexp_extract_all(word, '.', 0)"), " "), lit(" ")))
+        array_join(expr("regexp_extract_all(word, '(?s).', 0)"), " "), lit(" ")))
     var segs = words0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var prev: DataFrame = null
     val merges = scala.collection.mutable.ArrayBuffer.empty[Row]

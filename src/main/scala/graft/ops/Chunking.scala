@@ -240,12 +240,11 @@ object Chunking {
   def interleavedBlocks(spark: SparkSession, sfDir: String,
       blockSize: Long = 256L): DataFrame = {
     import graft.SgmlExtract
-    // The EXPRESSION form of the kernel (extractDf), not the typed
-    // Dataset path: a typed map is opaque to Catalyst, so withPackIds'
-    // ids-only sampling projection would still pay the whole parse. As a
-    // Project expression it column-prunes away — the sampling job reads
-    // ids off the parquet scan and the parse runs exactly once, in the
-    // shared shuffle stage. (The unused errors column prunes for free.)
+    // The kernel is a Project expression (extractDf), so withPackIds'
+    // ids-only sampling projection does not pay the parse: it
+    // column-prunes away — the sampling job reads ids off the parquet
+    // scan and the parse runs exactly once, in the shared shuffle stage.
+    // (The unused errors column prunes for free.)
     val extracted = SgmlExtract.extractDf(
         SgmlExtract.wrapDocumentsMarked(spark, sfDir).toDF(),
         SgmlExtract.Config(dialect = "html4", space = "preserve"))

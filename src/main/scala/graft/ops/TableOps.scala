@@ -3,7 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Doc, SgmlExtract}
-import graft.sgml.{Node, SgmlParser}
+import graft.SgmlExtract.ParserSlot
+import graft.sgml.{Node, ParseResult}
 
 /** Structured extraction: HTML tables → relational rows.
   *
@@ -16,8 +17,8 @@ import graft.sgml.{Node, SgmlParser}
   * the correct DOM per the HTML4 content model), then walks the
   * task-local DOM collecting cells in document order.
   *
-  * Scale shape: identical to the flagship — ONE narrow mapPartitions
-  * stage, parser reused across the partition's docs, trees never leave
+  * Scale shape: ONE narrow mapPartitions stage (a DOM walk, not spans),
+  * parser reused across the partition's docs, trees never leave
   * the task, output is a flat frame whose row count is the corpus cell
   * count. No shuffle, no driver involvement.
   */
@@ -55,27 +56,18 @@ object TableOps {
     val spark = ds.sparkSession
     import spark.implicits._
     ds.mapPartitions { it =>
-      val cfg = config.toParserConfig
-      var parser = new SgmlParser(cfg)
+      val slot = new ParserSlot(config.toParserConfig)
       it.flatMap { doc =>
-        try cellsOfDoc(parser, doc)
-        catch {
-          case e: Throwable => // poisoned doc → sentinel row, never a failed task
-            parser = new SgmlParser(cfg) // state unknown after throw: replace
-            Vector((doc.doc_id, -1, -1, -1, "error",
-              String.valueOf(e.getMessage).take(200)))
+        slot.parse(SgmlExtract.feedSpans(_, doc.spans))(cellsOfDoc(doc, _)) { e =>
+          // poisoned doc → sentinel row
+          Vector((doc.doc_id, -1, -1, -1, "error", ParserSlot.detail(e)))
         }
       }
     }.toDF("doc_id", "tbl_idx", "row_idx", "col_idx", "cell_tag", "cell")
   }
 
-  private def cellsOfDoc(parser: SgmlParser,
-      doc: Doc): Vector[(String, Int, Int, Int, String, String)] = {
-    parser.reset()
-    if (doc.spans != null) doc.spans.foreach { s =>
-      if (s.kind != "media" && s.text != null) parser.feed(s.text, s.offset)
-    }
-    val r = parser.finish()
+  private def cellsOfDoc(doc: Doc,
+      r: ParseResult): Vector[(String, Int, Int, Int, String, String)] = {
     val out = Vector.newBuilder[(String, Int, Int, Int, String, String)]
     var tblIdx = 0
     // descendant text concatenation; an undeclared entity keeps its

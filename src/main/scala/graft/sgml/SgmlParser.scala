@@ -1,12 +1,13 @@
 package graft.sgml
 
-/** Facade: one parser instance per document.
+/** Facade: one reusable parser, reset per document.
   *
   * Mirrors the reference lifecycle (`new_sgml_parser` → `set_sgml_parser`
   * → repeated `sgml_parse(P, [parse(content), …])` — `sgml2pl.c —
   * pl_new_sgml_parser / pl_sgml_parse` [V]; SURVEY.md §3 E1/E2): the
   * push API makes chunked feeds and interleaved text+media spans
-  * first-class. Pure Scala; used inside Spark `mapPartitions`.
+  * first-class. Pure Scala; one instance per task thread, held by
+  * `graft.SgmlExtract.ParserSlot`.
   */
 final class SgmlParser(cfg: ParserConfig) {
 
@@ -36,19 +37,6 @@ final class SgmlParser(cfg: ParserConfig) {
       return this
     }
     tokenizer.feed(text)
-    this
-  }
-
-  /** Array twin of feed — the Spark kernel's zero-virtual-call hot path
-    * (fed straight from the reused UTF-8 decode buffer). */
-  def feedChars(a: Array[Char], len: Int, baseOffset: Int = -1): this.type = {
-    if (baseOffset >= 0) tokenizer.setOffset(baseOffset)
-    chars += len
-    if (chars > cfg.maxDocChars) {
-      log.add("doc-too-large", baseOffset.max(0), s"> ${cfg.maxDocChars} chars")
-      return this
-    }
-    tokenizer.feedArr(a, len)
     this
   }
 

@@ -11,7 +11,7 @@ package graft.sgml
   * text+media inputs and chunked feeds work.
   *
   * No regex, no token materialization, one reusable StringBuilder per
-  * buffer: allocation-light for the Spark `mapPartitions` hot loop
+  * buffer: allocation-light for the per-row Spark kernel hot loop
   * (SURVEY.md §4).
   */
 final class Tokenizer(cfg: ParserConfig, holder: DtdHolder, sink: Event => Unit, log: ErrorLog) {
@@ -107,13 +107,8 @@ final class Tokenizer(cfg: ParserConfig, holder: DtdHolder, sink: Event => Unit,
   // append it in ONE StringBuilder call instead of per-char dispatch
   // (the reference's per-char putchar loop is the model for the slow
   // path; the bulk path is an observationally identical shortcut).
-  //
-  // Two bodies, same shape: a char[] one (the Spark kernel feeds the
-  // reused decode buffer — direct array indexing, zero virtual calls in
-  // the hot loop) and a CharSequence one (String callers: tests,
-  // streaming, DTD paths). Rare-state flags (marked sections, NET) are
-  // hoisted out of the scan loop — they can only change via push(),
-  // which ends the scan.
+  // Rare-state flags (marked sections, NET) are hoisted out of the scan
+  // loop — they can only change via push(), which ends the scan.
 
   def feed(s: CharSequence): Unit = {
     var i = 0
@@ -155,49 +150,6 @@ final class Tokenizer(cfg: ParserConfig, holder: DtdHolder, sink: Event => Unit,
         if (i < n) { push(s.charAt(i)); i += 1 }
       } else {
         push(s.charAt(i)); i += 1
-      }
-    }
-  }
-
-  /** Array twin of feed() — the Spark kernel's hot path. */
-  def feedArr(a: Array[Char], n: Int): Unit = {
-    var i = 0
-    while (i < n) {
-      if (state == S_TEXT && !log.overflowed && !frozen && !pendingCr) {
-        val msActive = msDepth > 0
-        val netActive = netDepth > 0
-        var j = i
-        var break = false
-        while (j < n && !break) {
-          val cc = a(j)
-          if (cc == '<' || cc == '&' || cc == '\r' ||
-              (msActive && cc == ']') || (netActive && cc == '/')) break = true
-          else j += 1
-        }
-        if (j > i) {
-          if (textBuf.length() == 0) textStart = pos
-          textBuf.append(a, i, j - i)
-          pos += j - i
-          i = j
-        }
-        if (i < n) { push(a(i)); i += 1 }
-      } else if (state == S_RAW && !log.overflowed && !frozen && !pendingCr) {
-        val rcdata = !rawIsCdata
-        var j = i
-        var break = false
-        while (j < n && !break) {
-          val cc = a(j)
-          if (cc == '<' || cc == '\r' || (rcdata && cc == '&')) break = true
-          else j += 1
-        }
-        if (j > i) {
-          rawBuf.append(a, i, j - i)
-          pos += j - i
-          i = j
-        }
-        if (i < n) { push(a(i)); i += 1 }
-      } else {
-        push(a(i)); i += 1
       }
     }
   }

@@ -53,4 +53,10 @@ class BpeSpec extends AnyFunSuite with BeforeAndAfterAll {
     // and (a,a)=1 → tie-break lhs 'a' < 'aa' → (a,a) again.
     assert(mergesOf("aaaa", 2) == Seq((1, "a", "a", 3L), (2, "a", "a", 1L)))
   }
+
+  test("a line-separator char inside a word keeps its place in the segmentation") {
+    // U+2028 survives the \s+ word split; the initial segmentation must
+    // keep it as a symbol (a plain regex '.' skips line terminators)
+    assert(mergesOf("a\u2028b a\u2028b", 1) == Seq((1, "a", "\u2028", 2L)))
+  }
 }

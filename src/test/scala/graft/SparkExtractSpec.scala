@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.ops.Dedup
 
-/** Spark-surface integration tests: the mapPartitions extraction kernel,
+/** Spark-surface integration tests: the extract_spans extraction kernel,
   * interleaved media passthrough through the Dataset API, lineage rows,
   * size-aware skew repartition, plan shape (pushdown before the opaque
   * kernel), and the training-data ops. */
@@ -44,15 +44,15 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("catalyst expression path ≡ typed mapPartitions path") {
     import spark.implicits._
+    // the expression (the one Spark path) against the in-JVM parse of
+    // the same docs, doc by doc
     val docs = SgmlExtract.wrapDocumentsMarked(spark, sf)
-    val typed = SgmlExtract.extract(docs, cfg).toDF()
     val exprd = SgmlExtract.extractDf(docs.toDF(), cfg)
-    assert(typed.schema.map(f => (f.name, f.dataType)) ===
-      exprd.schema.map(f => (f.name, f.dataType)))
-    val diff = typed.as("a").join(exprd.as("b"), "doc_id")
-      .filter(col("a.spans") =!= col("b.spans") || col("a.errors") =!= col("b.errors"))
-    assert(diff.count() === 0)
-    assert(exprd.count() === 500)
+    val got = exprd.as[Extracted].collect().map(e => e.doc_id -> e).toMap
+    val want = docs.collect()
+      .map(d => d.doc_id -> SgmlExtract.parseDoc(d, cfg.toParserConfig)).toMap
+    assert(got.size === 500)
+    assert(got === want)
     // SQL surface via the registered function
     docs.toDF().createOrReplaceTempView("docs_v")
     val viaSql = spark.sql(
@@ -113,13 +113,36 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
     val huge = rs.find(_.doc_id == "huge").get
     assert(huge.errors.exists(_.code == "doc-too-large"))
     assert(rs.find(_.doc_id == "ok").get.errors.isEmpty)
+    // null spans in → null spans and errors out (extract_spans is null-in,
+    // null-out; the typed view inherits it)
+    val nul = rs.find(_.doc_id == "null-spans").get
+    assert(nul.spans == null && nul.errors == null)
+  }
+
+  test("deeply nested doc: one internal-error row, the next doc in the partition parses clean") {
+    import spark.implicits._
+    // the recursive span walk overflows on 200k levels; the parser slot
+    // turns it into an error row and replaces the parser
+    val deep = "<a>" * 200000 + "x" + "</a>" * 200000
+    val clean = Doc("clean", Seq(InSpan("text", "<r><a>y</a></r>", null, 0)))
+    val ds = Seq(Doc("deep", Seq(InSpan("text", deep, null, 0))), clean).toDS().coalesce(1)
+    val xml = SgmlExtract.Config(dialect = "xml", space = "preserve")
+    val rs = SgmlExtract.extractDf(ds.toDF(), xml).as[Extracted].collect()
+    assert(rs.length == 2)
+    val internal = rs.filter(_.errors.exists(_.code == "internal-error"))
+    assert(internal.map(_.doc_id).toSeq == Seq("deep"))
+    assert(internal.head.spans.isEmpty)
+    assert(internal.head.errors.map(_.detail) == Seq("java.lang.StackOverflowError"))
+    val ok = rs.find(_.doc_id == "clean").get
+    assert(ok.spans.map(_.text) == Seq("y"))
+    assert(ok == SgmlExtract.parseDoc(clean, xml.toParserConfig))
   }
 
   test("lineage: one row per parse partition, totals match") {
     import spark.implicits._
     val docs = SgmlExtract.wrapDocuments(spark, sf).repartition(3)
     val ex = SgmlExtract.extract(docs, cfg)
-    val lin = SgmlExtract.lineage(ex, "run-1").collect()
+    val lin = SgmlExtract.lineage(ex.toDF(), "run-1").collect()
     assert(lin.length == 3)
     assert(lin.map(_.getAs[Long]("docs")).sum == 500)
     assert(lin.forall(_.getAs[String]("run_id") == "run-1"))
@@ -131,12 +154,11 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq(Doc("whale1", Seq(InSpan("text", "w" * 3000, null, 0))),
           Doc("whale2", Seq(InSpan("text", "w" * 3000, null, 0))))
     val df = docs.toDS().toDF()
-    val rep = SgmlExtract.sizeAwareRepartition(df, 4, whaleChars = 1000,
-      whalePartitions = 2)
+    val rep = SgmlExtract.sizeAwareRepartition(df, 4, whaleChars = 1000)
     val parts = rep.withColumn("pid", spark_partition_id())
       .filter(col("doc_id").startsWith("whale"))
       .select("doc_id", "pid").as[(String, Int)].collect().toMap
-    // round-robin whale placement: 2 whales over 2 whale partitions →
+    // round-robin whale placement: 2 whales over 4 partitions →
     // exactly one whale per task, deterministically (never co-located)
     assert(parts.size == 2)
     assert(parts.values.toSet.size == 2, s"whales co-located: $parts")

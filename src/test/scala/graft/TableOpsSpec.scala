@@ -60,6 +60,17 @@ class TableOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(outer._5.startsWith("outer")) // descendant text concatenation
   }
 
+  test("a media span inside a cell leaves the cells unchanged") {
+    import spark.implicits._
+    val spans = Seq(
+      InSpan("text", "<table><tr><td>a", null, 0),
+      InSpan("media", "", "img.png", 16),
+      InSpan("text", "b<td>c</table>", null, 17))
+    val got = TableOps.tableCells(Seq(Doc("d1", spans)).toDS()).collect()
+      .map(r => (r.getInt(2), r.getInt(3), r.getString(4), r.getString(5))).sortBy(_._2).toSeq
+    assert(got == Seq((0, 0, "td", "ab"), (0, 1, "td", "c")))
+  }
+
   test("undeclared entity in a cell keeps its source spelling") {
     val got = cellsOf("<table><tr><td>&unknownent;rate</table>")
     assert(got == Seq((0, 0, 0, "td", "&unknownent;rate")))
@@ -70,8 +81,8 @@ class TableOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // maxDocChars caps the big doc mid-feed (error-logged, not thrown); the
     // following doc in the SAME partition must still produce its cells —
     // the cap counter resets per doc, never bleeding across the iterator.
-    // (The Throwable → sentinel-row catch is defense-in-depth mirroring
-    // SgmlExtract.extract's replace-parser pattern — the kernel itself is
+    // (The throw → sentinel-row path is SgmlExtract.ParserSlot's, shared
+    // with every parse — defense in depth, the kernel itself is
     // fuzz-hardened not to throw.)
     val ds = Seq(
       Doc("big", Seq(InSpan("text", "<table><tr><td>waytoolongforthecap</table>", null, 0))), // 42 chars
